@@ -24,24 +24,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ops.export import export_tables
+from .ops.export import render_exports
 from .ops.pages import select_pages
 from .spark.pipeline import extract_documents, flatten_output
 
-# intermediates persisted by extract_tables; long-lived drivers should
-# release between corpora (same pattern as ops.dedup.release_caches)
-_PERSISTED: list = []
-
 
 def release_caches() -> int:
-    """Unpersist every intermediate this module cached; returns the
-    count released. Results of prior extract_tables calls remain valid
-    (they recompute from source if re-used)."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        df.unpersist()
-    _PERSISTED.clear()
-    return n
+    """Release this module's persisted intermediates; returns the
+    count released. ``extract_tables`` caches nothing, so this is
+    always 0 — kept so drivers that release between corpora need no
+    change."""
+    return 0
 
 
 def _load(spark: SparkSession, path: str, pages: str) -> DataFrame:
@@ -73,30 +66,15 @@ def extract_tables(spark: SparkSession, path: str, pages: str = "all",
     """TableList analogue: one row per extracted table with its HTML,
     A9 quality metrics, and the full export fan-out.
 
-    The table subset is persisted before fanning out into the export
-    stage + join: without it both join branches would re-run the whole
-    extraction (Catalyst does not dedupe common subplans across a
-    join), and the persisted set is only the table fragments — tiny
-    relative to the corpus at any scale.
-
-    Each call releases the previous call's cached intermediate, so a
-    long-lived driver iterating many corpora holds at most ONE table
-    subset in executor memory; earlier results stay valid (they
-    recompute from source if re-used). ``release_caches()`` drops the
-    last one too."""
-    release_caches()
-    flat = read_documents_flat(spark, path, pages, flavor)
-    tables = flat.filter(F.col("kind") == "table_html").select(
-        "doc_id", "offset", "kind", "text", "accuracy", "whitespace"
-    ).persist()
-    _PERSISTED.append(tables)
-    exports = export_tables(tables)
-    return (
-        tables.select("doc_id", "offset",
-                      F.col("text").alias("table_html"),
-                      "accuracy", "whitespace")
-        .join(exports, ["doc_id", "offset"])
-    )
+    One plan: the table fragments of the extraction go straight into
+    the export Arrow stage, which passes doc_id, offset, table_html,
+    accuracy and whitespace through and appends the rendered columns.
+    The extraction runs once, with no persist and no join."""
+    tables = read_documents_flat(spark, path, pages, flavor).filter(
+        F.col("kind") == "table_html").select(
+        "doc_id", "offset", F.col("text").alias("table_html"),
+        "accuracy", "whitespace")
+    return render_exports(tables, "table_html", tables.columns)
 
 
 # the reference CLI's multi-page merge separator (cli/main.py:164-226:

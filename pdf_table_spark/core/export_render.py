@@ -73,9 +73,12 @@ def render_table_html(html: str):
     sqlite_sql, excel_xml, html_db) — the reference's full export
     fan-out (csv/markdown/json/sqlite/excel + the width-less 'db'
     HTML variant, ``table_core.py:720-826``,
-    ``table_extractor_pdf.py:1122-1129``)."""
-    from .html import canonicalize_table_html, parse_table_html
-    m = grid_matrix(parse_table_html(html))
+    ``table_extractor_pdf.py:1122-1129``). The HTML is parsed once;
+    ``html_db`` re-serializes the same cells (what
+    ``canonicalize_table_html`` returns)."""
+    from .html import cells_to_html, parse_table_html
+    cells = parse_table_html(html)
+    m = grid_matrix(cells)
     nr, nc = len(m), (len(m[0]) if m else 0)
     buf = io.StringIO()
     csv.writer(buf, lineterminator="\n").writerows(m)
@@ -93,4 +96,4 @@ def render_table_html(html: str):
     return (nr, nc, buf.getvalue(), "\n".join(md_lines),
             json.dumps(m, ensure_ascii=False),
             _sqlite_dump(m), _excel_xml(m),
-            canonicalize_table_html(html))
+            cells_to_html(cells, table_width=None))

@@ -71,6 +71,9 @@ _TD_RE = re.compile(
     r"<t[dh]\b([^>]*)>(.*?)</t[dh]>", re.DOTALL | re.IGNORECASE)
 _TR_RE = re.compile(r"<tr\b[^>]*>(.*?)</tr>", re.DOTALL | re.IGNORECASE)
 _ATTR_RE = re.compile(r'(colspan|rowspan)\s*=\s*"?(\d+)"?', re.IGNORECASE)
+_EB_RE = re.compile(r"<eb\d*>\s*</eb\d*>")
+_BR_RE = re.compile(r"<br\s*/?>")
+_TAG_RE = re.compile(r"<[^>]+>")
 
 
 def parse_table_html(html: str) -> list[LogicalCell]:
@@ -79,7 +82,8 @@ def parse_table_html(html: str) -> list[LogicalCell]:
     reference alphabet's ``<td>``/``<td colspan="n">`` forms and
     ``<eb></eb>`` empty-cell tokens).
     """
-    html = re.sub(r"<eb\d*>\s*</eb\d*>", "<td></td>", html)
+    if "<eb" in html:
+        html = _EB_RE.sub("<td></td>", html)
     occupied: set[tuple[int, int]] = set()
     cells: list[LogicalCell] = []
     for r, tr in enumerate(_TR_RE.findall(html)):
@@ -93,15 +97,22 @@ def parse_table_html(html: str) -> list[LogicalCell]:
                     colspan = int(val)
                 else:
                     rowspan = int(val)
-            text = re.sub(r"<br\s*/?>", "\n", body)
-            text = re.sub(r"<[^>]+>", "", text)  # strip <b>/<i> wrappers
-            text = (text.replace("&lt;", "<").replace("&gt;", ">")
-                    .replace("&amp;", "&"))
+            # most bodies are plain text: skip the substitutions that
+            # cannot match
+            text = body
+            if "<" in text:
+                text = _BR_RE.sub("\n", text)
+                text = _TAG_RE.sub("", text)  # strip <b>/<i> wrappers
+            if "&" in text:
+                text = (text.replace("&lt;", "<").replace("&gt;", ">")
+                        .replace("&amp;", "&"))
             cell = LogicalCell(row=r, col=c, row_span=rowspan,
                                col_span=colspan, x0=0, y0=0, x1=0, y1=0,
-                               texts=[t for t in [text] if t != ""])
+                               texts=[text] if text else [])
             cells.append(cell)
-            for rr in range(r, r + rowspan):
+            # only the rows below need the slots: this row's scan
+            # already moves past them
+            for rr in range(r + 1, r + rowspan):
                 for cc in range(c, c + colspan):
                     occupied.add((rr, cc))
             c += colspan

@@ -65,59 +65,73 @@ def find_table_regions(horizontal, vertical, tol: float = G.JOINT_TOL):
     """Group ruling segments into table regions by joint connectivity.
 
     Returns list of (bbox, h_segs, v_segs, joints) sorted top-down then
-    left-right (reading order, reference O3).
+    left-right (reading order, reference O3); regions tied on that key
+    keep component order (smallest member segment first). Each region's
+    joints are sorted by (x, y) with duplicates on the rounded key
+    dropped.
 
     The H×V joint test is one numpy broadcast (same comparisons as
-    ``G.segment_intersection``, extended-by-tol tips) — the pairwise
-    Python loop was ~half the whole pipeline's CPU on dense pages.
+    ``G.segment_intersection``, extended-by-tol tips), and the joints
+    are grouped, sorted and deduplicated per component in numpy: dense
+    pages have thousands of joints, and per-joint Python work dominated
+    this function.
     """
     import numpy as np
 
-    segs = [("h", s) for s in horizontal] + [("v", s) for s in vertical]
-    edges: list[tuple[int, int]] = []
-    joints_all = []
-    if horizontal and vertical:
-        ha = np.asarray(horizontal, dtype=np.float64)  # (x0, y, x1, y)
-        va = np.asarray(vertical, dtype=np.float64)    # (x, y0, x, y1)
-        hx0, hy, hx1 = ha[:, 0:1], ha[:, 1:2], ha[:, 2:3]
-        vx, vy0, vy1 = va[:, 0], va[:, 1], va[:, 3]
-        hit = ((hx0 - tol <= vx) & (vx <= hx1 + tol)
-               & (vy0 - tol <= hy) & (hy <= vy1 + tol))
-        n_h = len(horizontal)
-        for i, j in np.argwhere(hit):          # row-major: same order
-            edges.append((int(i), n_h + int(j)))  # as the old loop
-            joints_all.append(
-                (int(i), n_h + int(j), (float(vx[j]), float(hy[i, 0]))))
-    comp = G.connected_components(len(segs), edges)
+    if not horizontal or not vertical:
+        return []
+    ha = np.asarray(horizontal, dtype=np.float64)  # (x0, y, x1, y)
+    va = np.asarray(vertical, dtype=np.float64)    # (x, y0, x, y1)
+    hx0, hy, hx1 = ha[:, 0:1], ha[:, 1:2], ha[:, 2:3]
+    vx, vy0, vy1 = va[:, 0], va[:, 1], va[:, 3]
+    hit = ((hx0 - tol <= vx) & (vx <= hx1 + tol)
+           & (vy0 - tol <= hy) & (hy <= vy1 + tol))
+    n_h = len(horizontal)
+    hi, vj = np.nonzero(hit)
+    if not len(hi):
+        return []
+    comp = np.asarray(G.connected_components(
+        n_h + len(vertical), zip(hi.tolist(), (vj + n_h).tolist())))
 
-    groups: dict[int, dict] = {}
-    for idx, (d, s) in enumerate(segs):
-        c = comp[idx]
-        g = groups.setdefault(c, {"h": [], "v": [], "joints": []})
-        g[d].append(s)
-    for i, j, pt in joints_all:
-        groups[comp[i]]["joints"].append(pt)
+    # joints ordered by (component, x, y); a segment touching nothing
+    # is a singleton component and never reaches a region
+    jc, jx, jy = comp[hi], vx[vj], hy[hi, 0]
+    order = np.lexsort((jy, jx, jc))
+    jc, jx, jy = jc[order], jx[order], jy[order]
+    # dedup joints on rounded key (reference A8 joint normalization),
+    # keeping the first in (x, y) order, BEFORE the joint-count gate:
+    # double-drawn strokes would otherwise double-count joints and let
+    # degenerate 1-row "tables" through, swallowing page prose
+    rx, ry = np.rint(jx), np.rint(jy)
+    by_key = np.lexsort((ry, rx, jc))  # stable: ties keep (x, y) order
+    k = np.stack((jc, rx, ry))[:, by_key]
+    keep = np.zeros(len(jc), dtype=bool)
+    keep[by_key[np.r_[True, (k[:, 1:] != k[:, :-1]).any(axis=0)]]] = True
+    jc, jx, jy = jc[keep], jx[keep], jy[keep]
+    starts = np.flatnonzero(np.r_[True, jc[1:] != jc[:-1]])
+    ends = np.r_[starts[1:], len(jc)]
+    big = ends - starts >= MIN_JOINTS
+    if not big.any():
+        return []
 
+    members: dict[int, tuple[list, list]] = {
+        c: ([], []) for c in jc[starts[big]].tolist()}
+    for idx, c in enumerate(comp.tolist()):
+        g = members.get(c)
+        if g is not None:
+            if idx < n_h:
+                g[0].append(horizontal[idx])
+            else:
+                g[1].append(vertical[idx - n_h])
+    jx, jy = jx.tolist(), jy.tolist()
     regions = []
-    for g in groups.values():
-        if not g["h"] or not g["v"]:
-            continue
-        # dedup joints on rounded key (reference A8 joint normalization)
-        # BEFORE the joint-count gate: double-drawn strokes would
-        # otherwise double-count joints and let degenerate 1-row
-        # "tables" through, swallowing page prose
-        seen, joints = set(), []
-        for x, y in sorted(g["joints"]):
-            k = (round(x), round(y))
-            if k not in seen:
-                seen.add(k)
-                joints.append((x, y))
-        if len(joints) < MIN_JOINTS:
-            continue
-        xs = [s[0] for s in g["h"]] + [s[2] for s in g["h"]] + [s[0] for s in g["v"]]
-        ys = [s[1] for s in g["v"]] + [s[3] for s in g["v"]] + [s[1] for s in g["h"]]
+    for (h, v), a, b in zip(members.values(), starts[big].tolist(),
+                            ends[big].tolist()):
+        xs = [s[0] for s in h] + [s[2] for s in h] + [s[0] for s in v]
+        ys = [s[1] for s in v] + [s[3] for s in v] + [s[1] for s in h]
         bbox = (min(xs), min(ys), max(xs), max(ys))
-        regions.append((bbox, sorted(g["h"]), sorted(g["v"]), joints))
+        regions.append((bbox, sorted(h), sorted(v),
+                        list(zip(jx[a:b], jy[a:b]))))
     # reading order: top of page first (PDF y grows up), then left
     regions.sort(key=lambda r: (-r[0][3], r[0][0]))
     return regions

@@ -73,17 +73,41 @@ def test_document_html_and_page_spec(spark, corpus):
 
 
 def test_extract_tables_single_extraction_pass(spark, corpus):
-    """The export fan-out + join must reuse the persisted table subset,
-    not re-run the extraction per branch."""
+    """The table fragments go from the extraction straight into ONE
+    export stage: the extraction runs once, nothing is cached, and no
+    join brings the rendered columns back. The rows equal the export
+    fan-out joined back to the table HTML and its quality metrics."""
     import re
 
-    from pdf_table_spark.api import extract_tables
+    from pyspark.sql import functions as F
+
+    from pdf_table_spark.api import extract_tables, read_documents_flat
+    from pdf_table_spark.ops.export import export_tables
+
     df = extract_tables(spark, corpus)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # both join branches read the cached table fragments
-    assert plan.count("InMemoryTableScan") >= 2
-    n = df.count()
-    assert n > 0
+    rows = df.collect()
+    assert rows
+    # the AQE root's final physical plan, after the collect ran it
+    plan = df._jdf.queryExecution().executedPlan().executedPlan() \
+        .toString()
+    assert len(re.findall(r"MapInArrow _extract_batches\(", plan)) == 1
+    assert len(re.findall(r"MapInArrow _export_batches\(", plan)) == 1
+    assert plan.count("MapInArrow") == 2
+    assert "Join" not in plan
+    assert "InMemoryTableScan" not in plan
+
+    flat = read_documents_flat(spark, corpus)
+    tables = flat.filter(F.col("kind") == "table_html").select(
+        "doc_id", "offset", F.col("text").alias("table_html"),
+        "accuracy", "whitespace")
+    joined = tables.join(export_tables(flat), ["doc_id", "offset"]) \
+        .select(*df.columns)
+
+    def key(r):
+        return (r.doc_id, r.offset)
+
+    assert [tuple(r) for r in sorted(rows, key=key)] \
+        == [tuple(r) for r in sorted(joined.collect(), key=key)]
 
 
 def test_document_html_page_separator(spark, corpus):

@@ -297,3 +297,125 @@ def test_stacked_region_stitch_u4():
                                  col_w=80.0, row_h=24.0)
     tables2, _ = extract_ruled_tables(rectsC + rectsD, tC + tD)
     assert len(tables2) == 2
+
+
+def _find_table_regions_reference(horizontal, vertical, tol):
+    """find_table_regions as a Python loop over every H×V hit (the
+    implementation the numpy grouping replaced)."""
+    import numpy as np
+
+    from pdf_table_spark.core import geometry as G
+
+    segs = [("h", s) for s in horizontal] + [("v", s) for s in vertical]
+    edges, joints_all = [], []
+    if horizontal and vertical:
+        ha = np.asarray(horizontal, dtype=np.float64)
+        va = np.asarray(vertical, dtype=np.float64)
+        hx0, hy, hx1 = ha[:, 0:1], ha[:, 1:2], ha[:, 2:3]
+        vx, vy0, vy1 = va[:, 0], va[:, 1], va[:, 3]
+        hit = ((hx0 - tol <= vx) & (vx <= hx1 + tol)
+               & (vy0 - tol <= hy) & (hy <= vy1 + tol))
+        n_h = len(horizontal)
+        for i, j in np.argwhere(hit):
+            edges.append((int(i), n_h + int(j)))
+            joints_all.append(
+                (int(i), n_h + int(j), (float(vx[j]), float(hy[i, 0]))))
+    comp = G.connected_components(len(segs), edges)
+    groups = {}
+    for idx, (d, s) in enumerate(segs):
+        g = groups.setdefault(comp[idx], {"h": [], "v": [], "joints": []})
+        g[d].append(s)
+    for i, _, pt in joints_all:
+        groups[comp[i]]["joints"].append(pt)
+    regions = []
+    for g in groups.values():
+        if not g["h"] or not g["v"]:
+            continue
+        seen, joints = set(), []
+        for x, y in sorted(g["joints"]):
+            k = (round(x), round(y))
+            if k not in seen:
+                seen.add(k)
+                joints.append((x, y))
+        if len(joints) < L.MIN_JOINTS:
+            continue
+        xs = ([s[0] for s in g["h"]] + [s[2] for s in g["h"]]
+              + [s[0] for s in g["v"]])
+        ys = ([s[1] for s in g["v"]] + [s[3] for s in g["v"]]
+              + [s[1] for s in g["h"]])
+        regions.append(((min(xs), min(ys), max(xs), max(ys)),
+                        sorted(g["h"]), sorted(g["v"]), joints))
+    regions.sort(key=lambda r: (-r[0][3], r[0][0]))
+    return regions
+
+
+def _random_rulings(rng):
+    """Ruled grids at random places (some double-drawn, some jittered
+    across a rounding boundary), crosses and T shapes below the joint
+    gate, stray strokes, and a pair of disjoint regions tied on (top,
+    left) — shuffled so component order varies."""
+    h, v = [], []
+    for _ in range(rng.randint(0, 4)):
+        x0, top = rng.uniform(0, 400), rng.uniform(200, 800)
+        xs = sorted(x0 + rng.uniform(10, 60) * k
+                    for k in range(rng.randint(1, 5)))
+        ys = sorted((top - rng.uniform(8, 30) * k
+                     for k in range(rng.randint(1, 5))), reverse=True)
+        for y in ys:
+            h.append((xs[0], y, xs[-1], y))
+            if rng.random() < 0.3:  # double-drawn stroke
+                d = rng.choice([0.0, 0.3, rng.uniform(-1, 1)])
+                h.append((xs[0], y + d, xs[-1], y + d))
+        for x in xs:
+            jx = x + rng.choice([0.0, 0.0, 0.5, -0.5, 0.49])
+            v.append((jx, ys[-1], jx, ys[0]))
+            if rng.random() < 0.3:
+                v.append((jx, ys[-1], jx, ys[0]))
+    for _ in range(rng.randint(0, 3)):  # crosses / Ts: < MIN_JOINTS
+        x, y = rng.uniform(0, 600), rng.uniform(0, 800)
+        h.append((x - 20, y, x + rng.choice([0.0, 20.0]), y))
+        v.append((x, y - 20, x, y + 20))
+    for _ in range(rng.randint(0, 4)):  # strays
+        x, y = rng.uniform(0, 600), rng.uniform(0, 800)
+        if rng.random() < 0.5:
+            h.append((x, y, x + rng.uniform(1, 200), y))
+        else:
+            v.append((x, y, x, y + rng.uniform(1, 200)))
+    if rng.random() < 0.3:
+        # A: grid at left=10, top=700; B: disjoint, its left (a long
+        # horizontal's x0) and top (a tall vertical's y1) tie with A's
+        for y in (700.0, 650.0, 600.0):
+            h.append((10.0, y, 100.0, y))
+        for x in (10.0, 55.0, 100.0):
+            v.append((x, 600.0, x, 700.0))
+        for y in (300.0, 250.0):
+            h.append((10.0, y, 600.0, y))
+        v.append((500.0, 200.0, 500.0, 700.0))
+        v.append((550.0, 200.0, 550.0, 300.0))
+    rng.shuffle(h)
+    rng.shuffle(v)
+    return h, v
+
+
+def test_find_table_regions_matches_per_hit_reference():
+    """The numpy joint grouping returns exactly what the per-hit loop
+    did: bbox, sorted segments, joint order and region order, including
+    double-drawn strokes, disjoint components, groups under MIN_JOINTS
+    and regions tied on (top, left)."""
+    import random
+
+    from pdf_table_spark.core import geometry as G
+
+    rng = random.Random(11)
+    n_regions = n_ties = 0
+    for _ in range(400):
+        h, v = _random_rulings(rng)
+        for tol in (G.JOINT_TOL, 0.0):
+            got = L.find_table_regions(h, v, tol)
+            want = _find_table_regions_reference(h, v, tol)
+            assert got == want
+            assert repr(got) == repr(want)  # same value types too
+            n_regions += len(got)
+            keys = [(-r[0][3], r[0][0]) for r in got]
+            n_ties += len(keys) - len(set(keys))
+    assert n_regions > 400 and n_ties > 10

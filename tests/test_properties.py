@@ -102,6 +102,96 @@ def test_html_parse_preserves_grid_occupancy(cells):
     assert occupancy(parsed) == occupancy(cells)
 
 
+def _parse_table_html_reference(html):
+    """parse_table_html before its plain-text fast path: every
+    substitution runs through an uncompiled re.sub on every cell."""
+    import re
+
+    from pdf_table_spark.core.html import _ATTR_RE, _TD_RE, _TR_RE
+    html = re.sub(r"<eb\d*>\s*</eb\d*>", "<td></td>", html)
+    occupied = set()
+    cells = []
+    for r, tr in enumerate(_TR_RE.findall(html)):
+        c = 0
+        for attrs, body in _TD_RE.findall(tr):
+            while (r, c) in occupied:
+                c += 1
+            colspan = rowspan = 1
+            for name, val in _ATTR_RE.findall(attrs):
+                if name.lower() == "colspan":
+                    colspan = int(val)
+                else:
+                    rowspan = int(val)
+            text = re.sub(r"<br\s*/?>", "\n", body)
+            text = re.sub(r"<[^>]+>", "", text)
+            text = (text.replace("&lt;", "<").replace("&gt;", ">")
+                    .replace("&amp;", "&"))
+            cells.append(LogicalCell(
+                row=r, col=c, row_span=rowspan, col_span=colspan,
+                x0=0, y0=0, x1=0, y1=0,
+                texts=[t for t in [text] if t != ""]))
+            for rr in range(r, r + rowspan):
+                for cc in range(c, c + colspan):
+                    occupied.add((rr, cc))
+            c += colspan
+    return cells
+
+
+body_chunk = st.one_of(
+    cell_text,
+    st.sampled_from(["<br>", "<br/>", "<br />", "<b>", "</b>", "<i>",
+                     "</i>", "&amp;", "&lt;", "&gt;", "&", "&amp;lt;",
+                     "<", ">", " ", "\n"]),
+    cell_text.map(lambda t: f"<b>{t}</b>"))
+td_attrs = st.lists(st.sampled_from(
+    [' colspan="2"', " colspan=3", ' rowspan="2"', " ROWSPAN='2'",
+     ' width="10%"', ""]), max_size=2).map("".join)
+table_cell = st.one_of(
+    st.tuples(td_attrs, st.lists(body_chunk, max_size=6).map("".join))
+    .map(lambda ab: f"<td{ab[0]}>{ab[1]}</td>"),
+    st.sampled_from(["<eb></eb>", "<eb1></eb1>", "<eb2> </eb2>",
+                     "<td></td>"]))
+
+
+@given(st.lists(st.lists(table_cell, max_size=5), max_size=5))
+@settings(max_examples=200, deadline=None)
+def test_parse_table_html_fast_path_matches_reference(rows):
+    """The precompiled, plain-text-skipping parser returns the same
+    cells as the all-regex reference for bodies with line breaks,
+    inline tags, entities, empty-cell tokens and span attributes."""
+    html = ('<table border="1"><tbody>'
+            + "".join("<tr>" + "".join(r) + "</tr>" for r in rows)
+            + "</tbody></table>")
+    assert parse_table_html(html) == _parse_table_html_reference(html)
+
+
+def test_render_table_html_parses_each_table_once(monkeypatch):
+    """One parse per exported table: the grid formats and html_db come
+    from the same cells, and html_db is still the canonical form."""
+    from pdf_table_spark.core import html as H
+    from pdf_table_spark.core.export_render import render_table_html
+
+    calls = []
+
+    def counting(html):
+        calls.append(html)
+        return parse_table_html(html)
+
+    tables = [
+        '<table border="1"><tbody><tr><td colspan="2">a<br/>b</td>'
+        '</tr><tr><td>&amp;</td><td><b>x</b></td></tr></tbody></table>',
+        "<table><tr><eb></eb><td rowspan=2>q</td></tr><tr><td>r</td>"
+        "</tr></table>",
+        "",
+    ]
+    canonical = [canonicalize_table_html(t) for t in tables]
+    monkeypatch.setattr(H, "parse_table_html", counting)
+    for i, (t, want) in enumerate(zip(tables, canonical), 1):
+        out = render_table_html(t)
+        assert len(calls) == i
+        assert out[-1] == want
+
+
 @given(st.integers(min_value=0, max_value=5000))
 @settings(max_examples=30, deadline=None)
 def test_extraction_deterministic_any_doc(doc_idx):
